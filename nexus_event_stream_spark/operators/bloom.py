@@ -77,10 +77,9 @@ MAX_EXPR_WORDS = 1 << 20
 _MASKS = [1 << i if i < 63 else -(1 << 63) for i in range(64)]
 
 
-@functools.lru_cache(maxsize=64)
 def int64_array_literal(values: tuple[int, ...]) -> Column:
     """One ``array<bigint>`` literal Column from a tuple of ints, built
-    with a SINGLE py4j call and memoized per value tuple.
+    with a SINGLE py4j call and memoized per (JVM gateway, value tuple).
 
     ``F.lit(list)`` builds the expression one element at a time — one
     py4j round trip per element — so a W-word filter literal cost
@@ -94,7 +93,19 @@ def int64_array_literal(values: tuple[int, ...]) -> Column:
     additionally evaluates ~3× faster per row (a folded ``Literal``
     rather than a 15k-child ``CreateArray``); the memo makes repeat
     compositions of the same frozen filter/sketch free. Values are
-    identical either way (int64 in, array<bigint> out)."""
+    identical either way (int64 in, array<bigint> out).
+
+    A memoized Column holds a handle into the JVM that built it, so the
+    memo is keyed on the live gateway too: a JVM relaunched in the same
+    process (session stopped, gateway shut down, new session) builds
+    fresh literals instead of handing out dead handles."""
+    from pyspark import SparkContext
+
+    return _int64_array_literal(SparkContext._gateway, values)
+
+
+@functools.lru_cache(maxsize=64)
+def _int64_array_literal(gateway, values: tuple[int, ...]) -> Column:
     import numpy as np
 
     return F.lit(np.asarray(values, dtype=np.int64))

@@ -553,6 +553,11 @@ def prepare_training_corpus(
         # and the anti-join's small side is bounded by the docs that
         # appear in a verified pair — usually orders of magnitude below
         # the corpus, broadcastable far longer (guide §3.1/§2.4).
+        # Edge cases, pinned in tests/test_pipeline.py: a NULL-id doc is
+        # never in a verified pair and never matches the anti-join, so it
+        # is always kept. Duplicate ids are decided per id, not per row:
+        # every row of a non-keeper id is dropped, every row of any other
+        # id is kept once (no fan-out, unlike a join on a mapping).
         comp = connected_components(pairs)
         non_keepers = comp.filter(F.col("node") != F.col("comp")).select(
             F.col("node").alias(id_col)

@@ -13,14 +13,22 @@ projection/signal.go:70-108; CLI client.go:68-77):
                               ``ErrNotFound`` / HTTP 404 analogue);
 - ``health()``              → view reachability + row count.
 
-Each endpooint is a one-liner DataFrame query over the materialized view;
-Catalyst's pushdown replaces the reference's hand-picked Redis indexes
-(SURVEY.md §4).
+The reference updates its Redis indexes once per commit and answers
+every request from them (projection/signal.go:38-108). ``SignalService``
+likewise pays the per-version cost once: each request reads the store
+pointer once, and the first request under a new pointer pins that
+snapshot's live view as one cached relation (snapshots are immutable, so
+the cache never goes stale) and unpersists the previous pin. Endpoints
+are then small queries over the pinned relation; ``health`` counts its
+rows once per pin. The priority filter returns every match to the
+driver anyway, so it sorts them by id there instead of running a Spark
+global sort — Python's code-point order is Spark's UTF-8 byte order.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import threading
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
@@ -37,16 +45,48 @@ class NotFoundError(LookupError):
 
 
 @dataclass
+class _Pin:
+    """One committed snapshot's cached live view, keyed on its pointer."""
+
+    pointer: dict
+    view: DataFrame
+    rows: int | None = None  # counted on the first health() probe
+
+
+@dataclass
 class SignalService:
     spark: SparkSession
     store: ParquetViewStore
+    _pin: _Pin | None = field(default=None, init=False, repr=False)
+    # ThreadingHTTPServer runs readers concurrently; pointer read and
+    # swap happen under one lock so pins only move forward in time
+    _lock: threading.Lock = field(
+        default_factory=threading.Lock, init=False, repr=False
+    )
 
-    def _view(self) -> DataFrame | None:
-        return self.store.read_live(self.spark)
+    def _pinned(self) -> _Pin | None:
+        """The pin for the current pointer — ONE pointer read per request.
+
+        Keyed on the whole pointer dict, not the version alone: a store
+        recreated at the same path restarts at version 0. The swap
+        unpersists the previous pin without blocking; a reader still
+        holding it re-reads that snapshot's files at worst, which the
+        store's vacuum keeps (current + previous)."""
+        with self._lock:
+            cur = self.store.current()
+            if cur is None:
+                return None
+            pin = self._pin
+            if pin is None or pin.pointer != cur:
+                if pin is not None:
+                    pin.view.unpersist(blocking=False)
+                view = self.store.read_live(self.spark, cur=cur)
+                pin = self._pin = _Pin(cur, view.cache())
+            return pin
 
     def list(self, priority: str | None = None) -> list[Row]:
-        view = self._view()
-        if view is None:
+        pin = self._pinned()
+        if pin is None:
             return []
         if priority is not None:
             # Unknown display string maps to score 0 → matches nothing
@@ -54,21 +94,23 @@ class SignalService:
             # display string reproduces that: bogus values hit no rows.
             # ListByPriority has NO 0-49 range (ZRangeArgs ByScore, exact
             # score): it returns ALL matches, ascending member order —
-            # the 50-row cap applies only to the unfiltered list.
-            return (
-                view.filter(F.col("priority") == F.lit(priority))
-                .orderBy(F.col("id").asc())
-                .collect()
+            # the 50-row cap applies only to the unfiltered list. NULL
+            # ids sort first, as in Spark's ascending order.
+            rows = pin.view.filter(
+                F.col("priority") == F.lit(priority)
+            ).collect()
+            return sorted(
+                rows, key=lambda r: (r["id"] is not None, r["id"] or "")
             )
         return newest_first(
-            view, ts_col="created_at", tiebreak=["id"], limit=LIST_LIMIT
+            pin.view, ts_col="created_at", tiebreak=["id"], limit=LIST_LIMIT
         ).collect()
 
     def get(self, id_: str) -> Row:
-        view = self._view()
+        pin = self._pinned()
         rows = (
-            view.filter(F.col("id") == F.lit(id_)).limit(1).collect()
-            if view is not None
+            pin.view.filter(F.col("id") == F.lit(id_)).limit(1).collect()
+            if pin is not None
             else []
         )
         if not rows:
@@ -76,11 +118,13 @@ class SignalService:
         return rows[0]
 
     def health(self) -> dict:
-        view = self._view()
+        pin = self._pinned()
+        if pin is not None and pin.rows is None:
+            pin.rows = pin.view.count()
         return {
             "status": "ok",
-            "view_exists": view is not None,
-            "rows": view.count() if view is not None else 0,
+            "view_exists": pin is not None,
+            "rows": pin.rows if pin is not None else 0,
         }
 
     @staticmethod

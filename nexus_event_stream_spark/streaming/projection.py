@@ -110,18 +110,21 @@ class ParquetViewStore:
 
     # -- read/write ---------------------------------------------------------
 
-    def read(self, spark: SparkSession) -> DataFrame | None:
-        """Full state table (latest event per key, tombstones included)."""
-        cur = self.current()
+    def read(self, spark: SparkSession, cur=None) -> DataFrame | None:
+        """Full state table (latest event per key, tombstones included).
+        ``cur`` pins a pointer the caller already read, as in
+        ``BucketedViewStore.read``."""
+        if cur is None:
+            cur = self.current()
         if cur is None:
             return None
         return spark.read.schema(self.schema).parquet(
             os.path.join(self.path, f"v={cur['version']}")
         )
 
-    def read_live(self, spark: SparkSession) -> DataFrame | None:
+    def read_live(self, spark: SparkSession, cur=None) -> DataFrame | None:
         """Serving view: tombstones filtered, action column dropped."""
-        state = self.read(spark)
+        state = self.read(spark, cur=cur)
         return None if state is None else live_view(state)
 
     def write(

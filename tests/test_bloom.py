@@ -169,3 +169,54 @@ def test_validation_errors():
         bloom_might_contain(
             BloomFilter(m_bits=(1 << 21) * 64, k=2, words=()), "k"
         )
+
+
+_RESTART_SCRIPT = """
+from pyspark import SparkContext
+from nexus_event_stream_spark.operators.bloom import int64_array_literal
+from nexus_event_stream_spark.session import get_spark
+
+def literal():
+    spark = get_spark(
+        master="local[1]", extra_conf={"spark.driver.memory": "512m"}
+    )
+    lit = int64_array_literal((1, 2, -3)).alias("a")
+    return spark, spark.range(1).select(lit).collect()[0].a
+
+spark, first = literal()
+spark.stop()
+gateway = SparkContext._gateway
+gateway.shutdown()
+gateway.proc.stdin.close()  # the JVM exits when its stdin closes
+gateway.proc.wait()
+SparkContext._gateway = SparkContext._jvm = None
+spark, second = literal()  # a new JVM behind a new gateway
+spark.stop()
+print(first, second)
+"""
+
+
+def test_array_literal_memo_survives_a_jvm_restart():
+    """The ``int64_array_literal`` memo is keyed on the live gateway: after
+    the session is stopped and its JVM relaunched in the same process, the
+    same values build a fresh literal instead of a handle into the dead
+    JVM. Runs in a child process so the suite's session stays up."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (root, env.get("PYTHONPATH")) if p
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", _RESTART_SCRIPT],
+        cwd=root,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.strip().splitlines()[-1] == "[1, 2, -3] [1, 2, -3]"

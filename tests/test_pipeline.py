@@ -514,3 +514,41 @@ def test_recipe_cms_rare_gram_gate(spark):
         stages["rare_grams"]._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange" not in plan
+
+
+def test_near_dedup_null_and_duplicate_ids(spark):
+    """The near-dedup anti-join's edge cases: NULL-id docs always pass
+    (one is a near-copy of doc 1 and still survives); duplicate ids are
+    decided per id — both rows of the non-keeper id 2 go, including the
+    unrelated one, and both rows of id 3 stay, once each."""
+    base = "the quick brown fox jumps over the lazy dog by the river bank"
+    docs = spark.createDataFrame(
+        [
+            (1, base, "a"),
+            (2, base + " today", "a"),
+            (None, base + " again", "a"),
+            (None, "a null id document that is unique in the corpus", "b"),
+            (3, "completely unrelated text about spark shuffle planning", "a"),
+            (3, "another unrelated passage on parquet row groups", "b"),
+            (2, "a third passage about network partitions in clusters", "b"),
+        ],
+        "doc_id long, text string, tag string",
+    )
+    recipe = CorpusRecipe(
+        quality=False,
+        redact_pii=False,
+        exact_dedup=False,
+        minhash_params={"threshold": 0.5},
+    )
+    _, stages = prepare_training_corpus(docs, recipe)
+    kept = sorted(
+        (r.doc_id is None, r.doc_id or 0, r.tag)
+        for r in stages["near_dedup"].collect()
+    )
+    assert kept == [
+        (False, 1, "a"),
+        (False, 3, "a"),
+        (False, 3, "b"),
+        (True, 0, "a"),
+        (True, 0, "b"),
+    ]

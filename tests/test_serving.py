@@ -98,3 +98,61 @@ def test_health_counts(spark, tmp_path):
     svc = SignalService(spark, seed_store(spark, tmp_path, [vrow("s1"), vrow("s2")]))
     h = svc.health()
     assert h["status"] == "ok" and h["rows"] == 2
+
+
+def test_pin_follows_each_committed_snapshot(spark, tmp_path):
+    """One cached relation per committed snapshot: a new write is served
+    on the next request, and the previous pin's cache is released."""
+    from pyspark import StorageLevel
+
+    store = seed_store(spark, tmp_path, [vrow("s1", "High"), vrow("s2", "Low")])
+    svc = SignalService(spark, store)
+    assert [r["id"] for r in svc.list(priority="High")] == ["s1"]
+    assert svc.health()["rows"] == 2
+    old = svc._pin.view
+    assert old.storageLevel != StorageLevel.NONE
+
+    store.write(
+        spark.createDataFrame([vrow("s3", "High")], STATE_SCHEMA), epoch=1
+    )
+    assert [r["id"] for r in svc.list()] == ["s3"]
+    assert [r["id"] for r in svc.list(priority="High")] == ["s3"]
+    assert svc.get("s3")["title"] == "title-s3"
+    with pytest.raises(NotFoundError):
+        svc.get("s1")
+    assert svc.health()["rows"] == 1
+    assert old.storageLevel == StorageLevel.NONE
+    assert svc._pin.view.storageLevel != StorageLevel.NONE
+
+
+def test_priority_filter_orders_like_spark_for_non_ascii_ids(spark, tmp_path):
+    # the filter sorts on the driver; Python's code-point order must equal
+    # Spark's UTF-8 byte order, including a supplementary-plane id that
+    # UTF-16 order would put before U+E000
+    ids = ["b", "B", "ab", "a~", "\u00e9", "\u00df", "\u4e2d", "\ue000",
+           "\U0001f600", "a"]
+    store = seed_store(spark, tmp_path, [vrow(i) for i in ids])
+    svc = SignalService(spark, store)
+    got = [r["id"] for r in svc.list(priority="High")]
+    assert got == sorted(ids, key=lambda s: s.encode("utf-8"))
+    spark_order = store.read_live(spark).orderBy("id").collect()
+    assert got == [r["id"] for r in spark_order]
+
+
+def test_pin_not_reused_by_a_store_recreated_at_version_0(spark, tmp_path):
+    """The pin is keyed on the whole pointer, so a store recreated at the
+    same path (its version restarts at 0) is not served from the old
+    snapshot's cache. The new store is written elsewhere and copied in,
+    as another process would write it: a write through this session
+    would also make Spark refresh the cache of that path."""
+    import shutil
+
+    store = seed_store(spark, tmp_path, [vrow("s1")])
+    svc = SignalService(spark, store)
+    assert [r["id"] for r in svc.list()] == ["s1"]
+    other = ParquetViewStore(str(tmp_path / "other"))
+    other.write(spark.createDataFrame([vrow("s2")], STATE_SCHEMA), epoch=7)
+    shutil.rmtree(store.path)
+    shutil.copytree(other.path, store.path)
+    assert store.current()["version"] == 0
+    assert [r["id"] for r in svc.list()] == ["s2"]

@@ -1,5 +1,5 @@
-"""Read-consistency pins for the retrieval services (/search, /similar)
-under concurrent republish — VERDICT r10 item 8.
+"""Read-consistency pins for the read services (/signals, /search,
+/similar) under concurrent republish — VERDICT r10 item 8.
 
 The contract: each request reads the store pointer ONCE and every
 pointer-derived input (bucket paths, corpus counters, tombstones, epoch
@@ -15,7 +15,11 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from nexus_event_stream_spark.serving import SearchService, SimilarService
+from nexus_event_stream_spark.serving import (
+    SearchService,
+    SignalService,
+    SimilarService,
+)
 from nexus_event_stream_spark.streaming.commit import (
     ConditionalPutBackend,
     PosixRenameBackend,
@@ -204,3 +208,104 @@ def test_similar_pins_one_snapshot_across_append_and_compact(
     assert [
         (r.vec_id, r.rank) for r in svc.similar(3, k=5, nprobe=4)
     ]
+
+
+def test_signal_reads_serve_one_snapshot_across_a_racing_commit(
+    spark, tmp_path, backend, monkeypatch
+):
+    """Concurrent readers (as ThreadingHTTPServer runs them, more threads
+    than cores) racing a commit: every answer is exactly one snapshot's
+    rows, each reader sees the old snapshot and then only the new one,
+    the replaced pin is released, and every request reads the pointer
+    once."""
+    import datetime as dt
+    import sys
+    import threading
+    import time
+
+    from pyspark import StorageLevel
+
+    from nexus_event_stream_spark.schemas import STATE_SCHEMA
+    from nexus_event_stream_spark.streaming.projection import (
+        ParquetViewStore,
+    )
+
+    ts = dt.datetime(2026, 2, 23, 18, 0, tzinfo=dt.timezone.utc)
+
+    def snapshot(prefix, n):
+        rows = [
+            ("created", f"{prefix}{i}", "t", "c", "High", "otavio", ts, ts)
+            for i in range(n)
+        ]
+        return spark.createDataFrame(rows, STATE_SCHEMA)
+
+    store = ParquetViewStore(str(tmp_path / "view"), backend=backend)
+    store.write(snapshot("a", 6), epoch=0)
+    svc = SignalService(spark, store)
+    old = frozenset(f"a{i}" for i in range(6))
+    new = frozenset(f"b{i}" for i in range(9))
+    by_rows = {6: old, 9: new}
+    calls = {
+        "list": lambda: frozenset(r["id"] for r in svc.list()),
+        "filter": lambda: frozenset(
+            r["id"] for r in svc.list(priority="High")
+        ),
+        "health": lambda: by_rows.get(svc.health()["rows"]),
+    }
+    readers = [name for name in calls for _ in range(2)]
+    seen = [[] for _ in readers]
+    errors = []
+    stop = threading.Event()
+
+    def reader(k):
+        try:
+            while not stop.is_set():
+                seen[k].append(calls[readers[k]]())
+        except Exception as exc:  # surfaced by the assertion below
+            errors.append(exc)
+
+    threads = [
+        threading.Thread(target=reader, args=(k,)) for k in range(len(readers))
+    ]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    deadline = time.monotonic() + 120
+    try:
+        for t in threads:
+            t.start()
+        while not all(seen) and time.monotonic() < deadline:
+            time.sleep(0.05)
+        old_pin = svc._pin
+        store.write(snapshot("b", 9), epoch=1)
+        while time.monotonic() < deadline and not all(
+            new in answers for answers in seen
+        ):
+            time.sleep(0.05)
+    finally:
+        stop.set()
+        for t in threads:
+            t.join(timeout=60)
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors
+    for name, answers in zip(readers, seen):
+        assert set(answers) <= {old, new}, name
+        assert answers[0] == old and answers[-1] == new, name
+        # pins only move forward: no old answer after the first new one
+        assert old not in answers[answers.index(new):], name
+    assert svc._pin.pointer == store.current()
+    assert old_pin.view.storageLevel == StorageLevel.NONE
+    assert svc._pin.view.storageLevel != StorageLevel.NONE
+
+    n_reads = {"n": 0}
+    real_current = store.current
+
+    def counting_current():
+        n_reads["n"] += 1
+        return real_current()
+
+    monkeypatch.setattr(store, "current", counting_current)
+    for call in (*calls.values(), lambda: svc.get("b0")):
+        n_reads["n"] = 0
+        call()
+        assert n_reads["n"] == 1
